@@ -131,9 +131,9 @@ def merge_upsert(
 
     Equivalent relational form (and the plan this compiles to):
     ``updates UNION ALL (target LEFT ANTI JOIN updates ON keys)`` — one
-    keyed shuffle, no full-table rewrite logic. This is the TESTED
-    parquet-native stand-in for sources/delta_io.upsert_delta (which
-    needs delta-spark); rewrite-in-place then lands via the partitioned
+    keyed shuffle, no full-table rewrite logic. This is the plain-
+    DataFrame form of sources/acid.merge (the ACID, file-pruned
+    variant); rewrite-in-place then lands via the partitioned
     writer, ideally partition-pruned to only the partitions the update
     batch touches.
 

@@ -18,31 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from financial_data_lakehouse_pipeline__spark.materialize import barrier, pin, release
+
 #: Contribution quantum — 1e-12, same as the k-means centroid means.
 _Q = 1e12
 
 
-def _loop_edges_pin(edges: DataFrame, pin: bool = True) -> DataFrame:
-    """Materialize a loop-invariant edge table once for per-iteration
-    reuse (lazy localCheckpoint). NOTE — co-partitioning on the
-    iteration join key was TRIED here and does not survive the pin
-    (round 14, VERDICT r13 #6): under AQE every materialization barrier
-    — ``localCheckpoint`` and ``persist`` alike — reports
-    ``UnknownPartitioning(0)`` at static-planning time (the barrier's
-    final partitioning is not known until its adaptive sub-plan
-    executes; verified in plans/r14/pagerank_copurchase_after.txt and a
-    minimal repro), so EnsureRequirements re-inserts the join exchange
-    regardless of any upstream ``repartition(N, key)``, which then only
-    ADDS a shuffle. What remains — and is kept — is the
-    materialization itself: the symmetrized union and its upstream
-    self-join execute once instead of once per iteration branch."""
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
-    return _pin(edges, pin)
-
-
 def cooccurrence_pairs(
-    df: DataFrame, group_col: str, item_col: str, pin: bool = True
+    df: DataFrame, group_col: str, item_col: str
 ) -> DataFrame:
     """Deduplicated co-occurrence pairs with src < dst (one row per
     undirected edge): items sharing a group value (parts in the same
@@ -51,23 +34,19 @@ def cooccurrence_pairs(
     sizes first (a 10k-item group contributes 50M pairs) the same way
     the dedup operators cap posting lists.
 
-    ``pin`` materializes the deduplicated pair table once (lazy
-    localCheckpoint): every consumer of a co-occurrence graph
-    re-references it from multiple plan branches (symmetrized union ×
-    per-iteration joins in pagerank/label-propagation; three self-join
-    sides in triangle counting), and without materialization each
-    branch re-runs the group self-join + distinct (measured at sf0.1:
-    pagerank 6.8 → 4.9 s median). Pass False for full-lineage plans."""
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
+    The deduplicated pair table is pinned: every consumer of a
+    co-occurrence graph re-references it from multiple plan branches
+    (symmetrized union × per-iteration joins in pagerank/label-
+    propagation; three self-join sides in triangle counting), and
+    without materialization each branch re-runs the group self-join +
+    distinct (measured at sf0.1: pagerank 6.8 → 4.9 s median)."""
     a = df.select(F.col(group_col).alias("__g"), F.col(item_col).alias("src"))
     b = df.select(F.col(group_col).alias("__g"), F.col(item_col).alias("dst"))
-    return _pin(
+    return pin(
         a.join(b, "__g")
         .filter(F.col("src") < F.col("dst"))
         .select("src", "dst")
-        .distinct(),
-        pin,
+        .distinct()
     )
 
 
@@ -137,22 +116,16 @@ def pagerank(
     by the node key to make it shuffle-free) + one groupBy dst. No
     driver-side state at any size.
 
-    Recompute vs persist (``persist_edges``, default auto): every
-    iteration references the loop-invariant edge lineage, so without
-    materialization the plan re-derives it O(iters) times. Whether that
-    costs anything is regime-dependent, and we measured it rather than
-    guessed (sf0.1, 2.4M edges, local[32], median of 4): at iters=2
-    recompute is 5.3s vs 9.1s with a MEMORY_AND_DISK persist — the
-    columnar cache build plus serialized branch execution loses to
-    re-running the codegen'd self-join over NVMe-cached parquet. The
-    crossover arrives as iterations grow (plan size and re-derivation
-    are linear in iters) or when the source scan itself is the expensive
-    part (remote object storage, 100 TB). Auto therefore persists only
-    when ``iters > 4``; callers in the scan-bound regime pass
-    ``persist_edges=True`` explicitly. When persisting, rank lineage is
-    also truncated with a ``localCheckpoint`` every 5 iterations, and
-    the result is eagerly materialized so the cache can be released
-    before returning (no cache leak into the caller's session).
+    Materialization: the loop-invariant edge and degree tables are
+    pinned (one evaluation instead of one per iteration branch). Rank
+    state is left lazy by default: eager materialization serializes
+    branch execution, and at iters=2 full recompute even beat a
+    MEMORY_AND_DISK persist of the edges (round 4; sf0.1, 2.4M edges,
+    local[32], median of 4: 5.3s vs 9.1s). Plan size grows linearly
+    with iters, so ``persist_edges`` (default auto: ``iters > 4``;
+    scan-bound callers pass True) adds a rank checkpoint every 5
+    iterations and an eager checkpoint of the result, after which the
+    edge pin is released (no block leak into the caller's session).
 
     Contribution-less nodes (possible only if the caller passes a
     non-symmetric edge list — the parameter is just ``edges``) keep the
@@ -161,26 +134,21 @@ def pagerank(
 
     Output: (node, deg, pagerank).
     """
-    from pyspark import StorageLevel
-
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
     if persist_edges is None:
         persist_edges = iters > 4
     # Loop-invariant tables are materialized ONCE (guide §2.4): the
     # symmetrized edge table (previously the union + its upstream
     # re-executed per iteration branch) and the degree table
     # (previously one re-aggregation per iteration in the rank update).
-    # Co-partitioning them on the join key was tried and REVERTED — see
-    # _loop_edges_pin: under AQE a materialization barrier loses its
-    # outputPartitioning at planning time, so the upstream repartition
-    # only added a shuffle without removing the per-round join exchange.
-    edges = edges.select("src", "dst")
-    if persist_edges:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        edges = _loop_edges_pin(edges)
-    deg = _pin(
+    # Co-partitioning them on the iteration join key was tried and
+    # REVERTED (round 14, VERDICT r13 #6; SCALE.md §24): under AQE every
+    # materialization barrier — localCheckpoint and persist alike —
+    # reports UnknownPartitioning(0) at static-planning time, so
+    # EnsureRequirements re-inserts the join exchange and the upstream
+    # repartition only ADDS a shuffle (plans/r14/
+    # pagerank_copurchase_after.txt).
+    edges = pin(edges.select("src", "dst"))
+    deg = pin(
         edges.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).cast("bigint").alias("deg")
         )
@@ -218,11 +186,14 @@ def pagerank(
             )
         )
         if persist_edges and (i + 1) % 5 == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint(eager=True)
+            # barrier: loop state, bounds the plan's growth in iters
+            ranks = barrier(ranks, eager=True)
     out = ranks.select("node", "deg", F.col("r").alias("pagerank"))
     if persist_edges:
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
+        # barrier: release(edges) below drops the blocks this result
+        # would otherwise still read
+        out = barrier(out, eager=True)
+        release(edges)
     return out
 
 
@@ -292,7 +263,7 @@ def connected_components(
     action). At 100 TB this is the difference between a bounded number
     of shuffles and an unbounded-by-data-shape iteration count.
 
-    Each round's edge set is ``localCheckpoint``-ed: lineage would
+    Each round's edge set is checkpointed: lineage would
     otherwise double per round (same guard as duplicate_clusters).
     Convergence = canonical edge multiset stable across a full
     large+small round, detected with an order-insensitive
@@ -308,7 +279,8 @@ def connected_components(
     # lazy checkpoints throughout the loop: the convergence checksum (or
     # next round's aggregation) is the forcing action anyway, so an
     # eager materialization pass per round would double the job count
-    e = _canonical_pairs(edges).localCheckpoint(eager=False)
+    # barrier: loop state (the edge set IS the iteration's state)
+    e = barrier(_canonical_pairs(edges))
 
     def _checksum(df: DataFrame) -> tuple:
         row = df.agg(
@@ -320,7 +292,7 @@ def connected_components(
     prev = _checksum(e)
     converged = False
     for _ in range(max_iterations):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        e = barrier(_small_star(_large_star(e)))  # loop state
         cur = _checksum(e)
         if cur == prev:
             converged = True
@@ -419,12 +391,12 @@ def k_core(
     "dense cohesive subgraph" filter (spam/bot rings, co-purchase
     communities, collaboration cores).
 
-    Each round: one degree aggregation — localCheckpoint-ed so the
+    Each round: one degree aggregation — pinned so the
     convergence check, the two anti-joins, and (on the final round) the
     caller all reuse the materialized result instead of re-running the
     aggregation per consumer — one weak-node filter, two anti-joins to
     drop their edges; the edge set only shrinks, and each round's
-    survivor set is localCheckpoint-ed to keep lineage flat.
+    survivor set is checkpointed to keep lineage flat.
     Convergence = no weak nodes (one tiny count per round — O(peeling
     depth) driver actions). Peeling depth is data-dependent (a chain
     peels O(n/2) rounds at k=2); ``max_iterations`` bounds it and the
@@ -434,21 +406,21 @@ def k_core(
     core (>= k by construction).
     """
     e = _canonical_pairs(edges)
-    e = e.unionByName(
+    # barrier: loop state — the edge set shrinks every round
+    e = barrier(e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    ))
     for _ in range(max_iterations):
         # lazy: weak.isEmpty() / the next round's aggregation forces
-        deg = e.groupBy(F.col("src").alias("node")).agg(
+        deg = pin(e.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).cast("bigint").alias("deg")
-        ).localCheckpoint(eager=False)
+        ))
         weak = deg.filter(F.col("deg") < k).select("node")
         if weak.isEmpty():
             return deg
-        e = (
+        e = barrier(  # loop state
             e.join(weak, e.src == weak.node, "left_anti")
             .join(weak, e.dst == weak.node, "left_anti")
-            .localCheckpoint(eager=False)
         )
     raise RuntimeError(f"k_core did not converge in {max_iterations} rounds")
 
@@ -468,7 +440,7 @@ def label_propagation(edges: DataFrame, iters: int = 2) -> DataFrame:
     ``iters`` (2 in the corpus, matching the PageRank convention):
     enough to merge tight co-purchase clusters while keeping the
     oracle's unroll bounded; at scale run more iterations with the
-    same per-iteration cost profile and localCheckpoint the label
+    same per-iteration cost profile and checkpoint the label
     lineage every few rounds (the connected_components pattern).
     Isolated nodes never appear in a symmetrized edge list and are out
     of scope by construction.
@@ -480,8 +452,8 @@ def label_propagation(edges: DataFrame, iters: int = 2) -> DataFrame:
     # Loop-invariant edges: one materialization — the symmetrized union
     # and its upstream self-join otherwise re-execute per iteration
     # (guide §2.4). Co-partitioning on dst was tried and reverted; see
-    # _loop_edges_pin.
-    edges = _loop_edges_pin(edges.select("src", "dst"))
+    # pagerank.
+    edges = pin(edges.select("src", "dst"))
     labels = (
         edges.select("src")
         .distinct()

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.functions import dsum
+from financial_data_lakehouse_pipeline__spark.materialize import barrier
 
 
 def target_encode_loo(
@@ -122,13 +123,13 @@ def equal_frequency_bins(
     # TWO subtrees (the offsets aggregate and the ranked window) —
     # without pinning, their agreement on range boundaries rests on
     # exchange reuse, an optimizer behavior, not a semantic contract.
-    # localCheckpoint materializes the (value, count, pid) histogram
-    # once so both consumers read the SAME assignment; the cost is one
+    # A barrier materializes the (value, count, pid) histogram once so
+    # both consumers read the SAME assignment; the cost is one
     # |distinct|-row materialization, metadata-scale vs the input.
-    vcr = (
+    vcr = barrier(
         vc.repartitionByRange(n_ranges, F.col("__v"))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
+        .withColumn("__pid", F.spark_partition_id()),
+        eager=True,
     )
     w_in = Window.partitionBy("__pid").orderBy("__v").rowsBetween(
         Window.unboundedPreceding, -1

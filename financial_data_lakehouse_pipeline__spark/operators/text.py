@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.functions import guarded_div, tokens
+from financial_data_lakehouse_pipeline__spark.materialize import barrier, pin
 
 # Tiny per-language stopword lists for the n-gram/stopword language
 # heuristic. Deliberately small + ASCII so the same lists are trivially
@@ -310,7 +311,6 @@ def tfidf_top_terms(
     text_col: str = "text",
     top_k: int = 3,
     min_term_len: int = 3,
-    pin: bool = True,
 ) -> DataFrame:
     """Top-k most characteristic terms per document by tf x idf.
 
@@ -325,18 +325,16 @@ def tfidf_top_terms(
     corpus), one window top-k. Ties broken by (tf desc, term asc) —
     fully deterministic.
 
-    ``pin`` materializes the (corpus-sized, narrow) tf table once for
-    its two consumers; pass False — or set SPARK_GRAFT_PIN_MODE — when
-    executor storage is tighter than recompute, or on clusters where a
-    non-replicated localCheckpoint's lineage loss is unacceptable
-    (ADVICE r13; the off-switch every corpus-scale pin now has).
+    The (corpus-sized, narrow) tf table is pinned once for its two
+    consumers; set SPARK_GRAFT_PIN_MODE (``off`` or ``replicated``)
+    when executor storage is tighter than recompute, or on clusters
+    where a non-replicated local checkpoint's lineage loss is
+    unacceptable (ADVICE r13).
     """
     from financial_data_lakehouse_pipeline__spark.functions import tokens as _tokens
     from pyspark.sql import Window
 
     canon = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
     from financial_data_lakehouse_pipeline__spark.sources.readers import (
         scan_parallelism_floor,
     )
@@ -349,9 +347,7 @@ def tfidf_top_terms(
     # pinned: the df aggregation and the scoring join both consume the
     # tf table — without materialization the tokenize/explode/groupBy
     # shuffle runs twice (guide §2.4)
-    tf = _pin(
-        terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")), pin
-    )
+    tf = pin(terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(F.countDistinct(F.col(id_col)).alias("__n"))
     w = Window.partitionBy(id_col).orderBy(
@@ -896,9 +892,6 @@ def naive_bayes_train(
     from financial_data_lakehouse_pipeline__spark.operators.dedup import (
         canonical_text,
     )
-
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
     from financial_data_lakehouse_pipeline__spark.sources.readers import (
         scan_parallelism_floor,
     )
@@ -910,7 +903,7 @@ def naive_bayes_train(
     # pinned: the totals aggregate and the weight projection both
     # consume the count table — without materialization the tokenize/
     # explode/groupBy shuffle runs twice (vocabulary-sized, bounded)
-    counts = _pin(
+    counts = pin(
         toks.groupBy("term").agg(
             F.sum(F.when(F.col("__y"), 1).otherwise(0)).cast("bigint").alias("c_pos"),
             F.sum(F.when(F.col("__y"), 0).otherwise(1)).cast("bigint").alias("c_neg"),
@@ -1024,7 +1017,7 @@ def bpe_learn_merges(
     - Per iteration: one pair-count aggregation + a 1-row top-1
       collect (cnt DESC, then lexicographic — deterministic under
       ties) — the only driver-side state is the k merge tuples,
-      kmeans-centroid-legitimate. localCheckpoint every
+      kmeans-centroid-legitimate. A checkpoint every
       ``checkpoint_every`` merges truncates the replace-chain lineage.
 
     Tokens are [a-z]+ runs of the lowercased text (so '|' can never
@@ -1052,10 +1045,11 @@ def bpe_learn_merges(
     )
     # lazy: the first iteration's pair-count collect is the forcing
     # action (round 14 — an eager checkpoint here was one extra
-    # materialization job, same class as the r13 loop-checkpoint fix)
-    st = words.select(
+    # materialization job, same class as the r13 loop-checkpoint fix).
+    # barrier: loop state — the replace chain grows every merge
+    st = barrier(words.select(
         F.regexp_replace("w", r"(.)", r"|$1|").alias("s"), "freq"
-    ).localCheckpoint(eager=False)
+    ))
     merges: list[tuple[int, str, str, int]] = []
     for r in range(int(n_merges)):
         pz = (
@@ -1093,7 +1087,7 @@ def bpe_learn_merges(
         if checkpoint_every and (r + 1) % checkpoint_every == 0:
             # lazy: the next iteration's collect forces it; a trailing
             # never-forced checkpoint on the last round costs nothing
-            st = st.localCheckpoint(eager=False)
+            st = barrier(st)  # loop state, as above
     return spark.createDataFrame(
         merges,
         "rank int, left_sym string, right_sym string, pair_count bigint",
@@ -1305,16 +1299,15 @@ def zipf_fit(
 
     n_ranges = shuffle_partition_count(df.sparkSession)
     # __pid is nondeterministic (sampled range boundaries) and feeds
-    # BOTH the offsets aggregate and the local-rank window —
-    # localCheckpoint pins one assignment for both consumers (the
+    # BOTH the offsets aggregate and the local-rank window — a
+    # barrier pins one assignment for both consumers (the
     # equal_frequency_bins contract; exchange reuse is an optimizer
     # behavior, not a guarantee).
-    vcr = (
+    vcr = barrier(
         vocab.repartitionByRange(
             n_ranges, F.col("__c").desc(), F.col("term")
-        )
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
+        ).withColumn("__pid", F.spark_partition_id()),
+        eager=True,
     )
     # per-range local rank: P parallel tasks over ~|vocab|/P rows each
     w_in = Window.partitionBy("__pid").orderBy(

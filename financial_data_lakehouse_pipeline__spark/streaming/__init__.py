@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from financial_data_lakehouse_pipeline__spark.materialize import barrier, pin
+
 
 def stream_from_parquet_dir(
     spark: SparkSession, path: str, schema: T.StructType, glob: str | None = None
@@ -245,9 +247,10 @@ def upsert_sink(
     transaction log: readers always see a complete committed version,
     and the versions double as time travel.
 
-    At scale the same foreachBatch body targets delta_io.upsert_delta
-    (real ACID MERGE, no full-table rewrite); the copy-on-write variant
-    here keeps the semantics testable without delta-spark.
+    At scale the same foreachBatch body targets an ACID MERGE
+    (sources/acid.merge rewrites only the files the batch touches); the
+    full-snapshot copy-on-write variant here is the simplest form of
+    the semantics.
 
     Returns the StreamingQuery (caller awaits termination); read the
     result with :func:`read_upsert_state`.
@@ -508,7 +511,7 @@ def dedup_ingest_sink(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         txn = f"{query_name}:{batch_id}"
         spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
+        batch_df = pin(batch_df, eager=True)
         if acid.latest_version(root) < 0:
             batch_ids = batch_df.select(id_col)
             pairs = dedup.minhash_lsh_pairs(
@@ -535,24 +538,33 @@ def dedup_ingest_sink(
                 existing = base.select(id_col).join(
                     F.broadcast(inc_ids), id_col, "left_semi"
                 )
-                batch_df = batch_df.join(
-                    F.broadcast(existing), id_col, "left_anti"
-                ).localCheckpoint()
+                batch_df = pin(
+                    batch_df.join(F.broadcast(existing), id_col, "left_anti"),
+                    eager=True,
+                )
                 base_for_pairs = base
             else:  # "update"
                 # Re-emitted ids are document updates: exclude their
                 # OLD corpus rows from the base side so the new text is
                 # near-dup-checked against the REST of the corpus, not
                 # against its own previous version.
-                batch_df = batch_df.dropDuplicates([id_col]).localCheckpoint()
+                # barrier: which duplicate survives is nondeterministic,
+                # and the pair finder and the commit must see the same one
+                batch_df = barrier(
+                    batch_df.dropDuplicates([id_col]), eager=True
+                )
                 base_for_pairs = base.join(
                     F.broadcast(inc_ids), id_col, "left_anti"
                 )
             batch_ids = batch_df.select(id_col)
-            all_pairs = dedup.incremental_minhash_pairs(
-                base_for_pairs, batch_df, id_col, text_col, n, num_hashes,
-                bands, threshold, max_bucket_size=max_bucket_size,
-            ).localCheckpoint()
+            all_pairs = pin(
+                dedup.incremental_minhash_pairs(
+                    base_for_pairs, batch_df, id_col, text_col, n,
+                    num_hashes, bands, threshold,
+                    max_bucket_size=max_bucket_size,
+                ),
+                eager=True,
+            )
             # pair sides that are batch members (vs corpus members)
             a_in = all_pairs.join(
                 batch_ids.withColumnRenamed(id_col, "id_a"), "id_a",

@@ -73,14 +73,16 @@ def main() -> int:
         "Exchanges = shuffle boundaries in the initial plan (AQE may "
         "coalesce/replan at runtime); Scans = parquet scan operators. "
         "Since round 13 the multi-consumer operators PIN their shared "
-        "subtrees with lazy localCheckpoints (operators/dedup._pin — "
-        "the round's optimization; OPTIMIZATION_r13.md), so a pinned "
-        "query's visible plan reads `Scan ExistingRDD` nodes and "
-        "REPORTS 0 parquet scans here: the real scans/exchanges live "
-        "upstream of the pin and execute exactly ONCE during its "
-        "materialization (vs once per consuming branch before — e.g. "
-        "minhash_lsh_pairs was 20 scans / 38 exchanges for one logical "
-        "pass). WSCG = codegen ids visible "
+        "subtrees with lazy local checkpoints (materialize.pin; "
+        "OPTIMIZATION_r13.md), so a pinned query's visible plan reads "
+        "`Scan ExistingRDD` nodes and REPORTS 0 parquet scans here: the "
+        "real scans/exchanges live upstream of the pin and execute "
+        "exactly ONCE during its materialization (vs once per consuming "
+        "branch before — e.g. minhash_lsh_pairs was 20 scans / 38 "
+        "exchanges for one logical pass). Lazy does not mean no jobs "
+        "while this report builds the plans: under AQE a lazy pin over "
+        "a shuffle runs that shuffle's upstream job when the pin is "
+        "created (tests/test_pin_modes.py). WSCG = codegen ids visible "
         "PRE-execution (AQE assigns most ids at runtime, so 0 here does "
         "not mean no codegen); Bcast = broadcast joins; Cartesian should "
         "always be 'no'.",
